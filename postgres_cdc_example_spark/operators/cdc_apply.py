@@ -12,33 +12,36 @@ order, one event at a time:
 - ``D`` → ``DELETE … WHERE id=$1`` (``replicator/main.go:252-268``).
 
 Instead of replaying events one at a time, we compute the *closed form* of
-that fold per key, which makes the whole apply three hash-exchanges on the
-key (one window + one reusing its partitioning + one join) regardless of how
-many events a key has — the idiomatic-Spark answer to "apply the log in
-order" that scales to 100 TB where a per-row loop cannot:
+that fold per key. State rows join the change log as pseudo-events at
+seq = -inf, and ONE ``groupBy(key)`` over ``changes ∪ state`` folds both —
+a single hash-exchange on the key (no window, no join) regardless of how
+many events a key has: the idiomatic-Spark answer to "apply the log in
+order" that scales to 100 TB where a per-row loop cannot.
 
 Let, per key:
   d_max   = max seq among D events (None if no D)
-  iu_last = max seq among I/U events
   i_first = min seq among I events with seq > coalesce(d_max, -inf)
             (= the event that *created* the row's current incarnation)
+  last    = the max-seq row among I/U events and the state pseudo-event
 
 Then the final row exists iff
   (no D and the key was in state)  OR  i_first is not NULL,
-its value columns come from the event at ``iu_last`` (falling back to state
-values when U-events only touched some columns — not needed for the person
-schema where events carry full images), and its created_at is
+its value columns come from ``last``, and its created_at is
   state.created_at        if no D and the key was in state   (upsert keeps it)
   created_at @ i_first    otherwise                           (fresh insert).
 
 This reproduces the serial fold exactly, including insert-after-delete
-re-creation and "U on absent key is a no-op".
+re-creation and "U on absent key is a no-op". Rows with a NULL key, on
+either side, are dropped: a primary key is never NULL.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# seq of the state rows' pseudo-events: below every WAL position
+NEG_INF = -(1 << 62)
 
 
 def compact_changes(
@@ -73,76 +76,47 @@ def apply_changes(
     ``changes`` columns: key, seq, action ("I"/"U"/"D"), value columns, and
     (optionally) ``created_col`` carried on insert events.
     ``state`` columns: key, value columns, optional ``created_col``.
+
+    Built from SQL-expression strings: a handful of plan-building calls
+    instead of one per Column operator, which is what a micro-batch pays
+    on every trigger.
     """
     if value_cols is None:
         reserved = {key, seq, action, created_col}
         value_cols = [c for c in changes.columns if c not in reserved]
-
-    k, s, a = F.col(key), F.col(seq), F.col(action)
-    is_iu = a.isin("I", "U")
-
-    # One hash-exchange on `key`; the groupBy below reuses its partitioning.
-    w = Window.partitionBy(key)
-    ev = (
-        changes.withColumn("__d_max", F.max(F.when(a == "D", s)).over(w))
-        .withColumn("__iu_last", F.max(F.when(is_iu, s)).over(w))
-        .withColumn(
-            "__i_first",
-            F.min(
-                F.when((a == "I") & (s > F.coalesce(F.col("__d_max"), F.lit(-(1 << 62)))), s)
-            ).over(w),
+    q = lambda c: f"`{c}`"  # noqa: E731
+    cols = [q(c) for c in value_cols]
+    # without a created column, a typed NULL keeps one aggregate shape
+    created = q(created_col) if created_col else "CAST(NULL AS INT)"
+    rows = changes.selectExpr(
+        q(key), f"{q(seq)} AS __seq", f"{q(action)} AS __a", *cols, f"{created} AS __c"
+    ).unionByName(
+        state.selectExpr(
+            q(key), f"{NEG_INF} AS __seq", "'S' AS __a", *cols, f"{created} AS __c"
         )
     )
-
-    val_struct = F.struct(*[F.col(c) for c in value_cols])
     aggs = [
-        F.first("__d_max").alias("__d_max"),
-        F.first("__i_first").alias("__i_first"),
-        # exactly one row per key satisfies seq == __iu_last / __i_first;
-        # max() over a single non-null value selects it.
-        F.max(F.when(s == F.col("__iu_last"), val_struct)).alias("__vals"),
+        # `last`: the latest row carrying an image (an I/U event or the
+        # state row); other actions (e.g. a wal2json T) change nothing
+        f"max_by(struct({', '.join(cols)}), IF(__a IN ('I', 'U', 'S'), __seq, NULL)) AS __v",
+        "max(IF(__a = 'D', __seq, NULL)) AS __d",
+        # the state row is the min-seq row
+        "min(struct(__seq, __c)) AS __m",
+        # candidates for i_first; array_min orders the structs by seq
+        "collect_list(IF(__a = 'I', struct(__seq, __c), NULL)) AS __is",
     ]
-    if created_col is not None:
-        aggs.append(
-            F.max(F.when(s == F.col("__i_first"), F.col(created_col))).alias("__created_new")
-        )
-    summary = ev.groupBy(key).agg(*aggs)
-
-    st = state.select(
-        k.alias("__sk"),
-        F.lit(True).alias("__in_state"),
-        *[F.col(c).alias(f"__s_{c}") for c in value_cols],
-        *( [F.col(created_col).alias("__s_created")] if created_col else [] ),
+    # no D and the key was in state / the i_first event (NULL if none)
+    kept = f"(__d IS NULL AND __m.__seq = {NEG_INF})"
+    born = f"array_min(filter(__is, e -> e.__seq > coalesce(__d, {NEG_INF})))"
+    out = [q(key), "__v.*"]
+    if created_col:
+        out.append(f"IF({kept}, __m.__c, {born}.__c) AS {q(created_col)}")
+    return (
+        rows.groupBy(key)
+        .agg(*[F.expr(e) for e in aggs])
+        .where(f"{q(key)} IS NOT NULL AND ({kept} OR {born} IS NOT NULL)")
+        .selectExpr(*out)
     )
-
-    joined = summary.join(st, summary[key] == st["__sk"], "full_outer")
-
-    in_state = F.coalesce(F.col("__in_state"), F.lit(False))
-    has_summary = F.col(key).isNotNull()
-    exists_final = F.when(
-        ~has_summary, in_state  # untouched state row
-    ).otherwise(
-        (F.col("__d_max").isNull() & in_state) | F.col("__i_first").isNotNull()
-    )
-
-    out_key = F.coalesce(F.col(key), F.col("__sk")).alias(key)
-    out_vals = [
-        F.when(
-            has_summary & F.col("__vals").isNotNull(), F.col("__vals")[c]
-        )
-        .otherwise(F.col(f"__s_{c}"))
-        .alias(c)
-        for c in value_cols
-    ]
-    out_cols = [out_key, *out_vals]
-    if created_col is not None:
-        keep_state_created = F.col("__d_max").isNull() & in_state
-        out_cols.append(
-            F.when(~has_summary | keep_state_created, F.col("__s_created"))
-            .otherwise(F.col("__created_new"))
-            .alias(created_col)
-        )
-    return joined.filter(exists_final).select(*out_cols)
 
 
 def align_to_schema(df: DataFrame, target: "StructType") -> DataFrame:

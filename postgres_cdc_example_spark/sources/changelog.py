@@ -22,7 +22,7 @@ SURVEY.md §7.4 hard part 2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -47,13 +47,18 @@ def decode_change_lines(lines: DataFrame, value_col: str = "value") -> DataFrame
     )
 
 
+def is_dead_letter() -> Column:
+    """True on a decoded row whose line is a dead letter (T7)."""
+    # from_json yields a null struct only when the whole line is unparseable;
+    # a parseable line always has a non-null action.
+    return F.col("change").isNull() | F.col("change.action").isNull()
+
+
 def split_corrupt(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(valid, dead_letter) — the reference logs and skips; we keep a
     dead-letter frame so nothing is silently dropped (T7)."""
-    # from_json yields a null struct only when the whole line is unparseable;
-    # a parseable line always has a non-null action.
-    ok = F.col("change").isNotNull() & F.col("change.action").isNotNull()
-    return decoded.filter(ok), decoded.filter(~ok)
+    dead = is_dead_letter()
+    return decoded.filter(~dead), decoded.filter(dead)
 
 
 PERSON_COLUMNS = {
@@ -82,7 +87,16 @@ def flatten_changes(
     - the key for D comes from ``identity`` (old-row image,
       ``replicator/main.go:252-268``); for I/U from ``columns``.
     """
-    ch = decoded.filter(F.col("change.table") == table)
+    return decoded.filter(F.col("change.table") == table).select(
+        *flat_change_columns(columns, key, key_type)
+    )
+
+
+def flat_change_columns(
+    columns: dict[str, str], key: str = "id", key_type: str = "long"
+) -> list[Column]:
+    """The projection half of :func:`flatten_changes`: ``seq``, ``action``,
+    the key and the declared value columns, read off ``change``."""
     cols_map = F.map_from_entries(
         F.transform("change.columns", lambda c: F.struct(c["name"], c["value"]))
     )
@@ -90,14 +104,14 @@ def flatten_changes(
         F.transform("change.identity", lambda c: F.struct(c["name"], c["value"]))
     )
     get = lambda m, k: F.element_at(m, F.lit(k))  # noqa: E731
-    return ch.select(
+    return [
         F.col("change.seq").alias("seq"),
         F.col("change.action").alias("action"),
         F.coalesce(get(cols_map, key), get(ident_map, key))
         .cast(key_type)
         .alias(key),
         *[get(cols_map, name).cast(tp).alias(name) for name, tp in columns.items()],
-    )
+    ]
 
 
 def route_changes(

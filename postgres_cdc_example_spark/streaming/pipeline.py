@@ -12,13 +12,23 @@ Spark shape::
     backfill batch (snapshot_copy)            # T3 snapshot+stream handoff
     readStream (JSON lines)                   # S5 — file source in tests,
                                               #      Kafka/Debezium in prod
-      → decode_change_lines / split_corrupt   # S6 + T7 dead-letter
-      → flatten_person_changes                # P2/P7
-      → filter(predicate)                     # P4 publication row filter
-      → foreachBatch: apply_changes + commit  # P3/J1-J4/T5, versioned state
+      → decode_change_lines, dead flag        # S6 + T7 dead-letter
+      → flat_change_columns (person)          # P2/P7
+      → predicate U→D/I transform             # P4 publication row filter
+                                              # (action NULL = not replicated)
+      → foreachBatch (planned once, above):
+          replay guard                        # no Spark action yet
+          observe(count_if(dead_letter))      # T7 count, filled by the write
+          filter(action IS NOT NULL)
+          apply_changes(state, changes)       # P3/J1-J4: one exchange on id
+          commit                              # T5 versioned state
     checkpointLocation                        # S7 — the "replication slot":
                                               # offset tracking, drop dir =
                                               # drop slot
+
+A steady micro-batch is two Spark jobs: the shuffle-map stage (lines and
+state into the apply's hash exchange) and the state write, which also
+fills in the dead-letter count. Each line is read and parsed once.
 
 Delivery: checkpointed offsets + idempotent per-version state commit =
 exactly-once state (strictly stronger than the reference's at-most-once slot
@@ -27,15 +37,17 @@ consumption, T2 — deliberate divergence documented in SURVEY.md §7.4).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from postgres_cdc_example_spark.operators.cdc_apply import apply_changes
 from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
 from postgres_cdc_example_spark.sources.changelog import (
+    PERSON_COLUMNS,
     decode_change_lines,
-    flatten_person_changes,
-    split_corrupt,
+    flat_change_columns,
+    is_dead_letter,
 )
 from postgres_cdc_example_spark.sources.snapshot import snapshot_copy
 from postgres_cdc_example_spark.streaming.state import VersionedStateStore
@@ -99,12 +111,21 @@ class CdcPipeline:
             self.store.commit(merged, version=0)
 
     # --- the per-micro-batch apply (P3/J1-J4/T5) ---------------------------
-    def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        decoded = decode_change_lines(batch_df)
-        valid, dead = split_corrupt(decoded)
-        ndead = dead.count()
-        self.dead_letter_count += ndead  # reference logs & skips (T7)
-        changes = flatten_person_changes(valid)
+    def _decode(self, lines: DataFrame) -> DataFrame:
+        """Raw JSON lines → one typed person-change row per line, with a
+        ``dead_letter`` flag. ``action`` is NULL on every line that does not
+        replicate (dead letters, other tables' events, and inserts that fail
+        the publication filter), so the batch can count each line before it
+        drops them. Projections only: a filter here would be pushed below
+        the decode and re-parse each line once per field it reads. Works on
+        the streaming frame (``start`` plans it once) and on a batch of
+        lines alike."""
+        rows = decode_change_lines(lines).select(
+            is_dead_letter().alias("dead_letter"),
+            F.col("change.table").alias("table"),
+            *flat_change_columns(PERSON_COLUMNS),
+        )
+        a = F.col("action")
         if self.predicate is not None:
             # Publication row filter on the event's new image, with
             # Postgres's filter-crossing UPDATE transform (UPDATE docs,
@@ -114,34 +135,48 @@ class CdcPipeline:
             # is applied as an upsert I (the old image may have failed the
             # filter, so the key can be absent — plain U would no-op).
             # Deletes carry no image and always replicate.
-            from pyspark.sql import functions as F
-
-            a = F.col("action")
             passes = F.coalesce(self.predicate, F.lit(False))
-            changes = changes.withColumn(
-                "action",
-                F.when((a == "U") & ~passes, F.lit("D"))
-                .when(a == "U", F.lit("I"))
-                .otherwise(a),
-            ).filter((F.col("action") == "D") | passes)
-        if hasattr(self.store, "apply_and_commit"):
-            # incremental path: read + rewrite only the changed buckets;
-            # replay after crash re-applies idempotently (merge semantics)
-            self.store.apply_and_commit(changes)
-            return
+            a = F.when(a == "U", F.when(passes, F.lit("I")).otherwise(F.lit("D"))).when(
+                (a == "D") | passes, a
+            )
+        return rows.withColumn("action", F.when(F.col("table") == "person", a)).drop(
+            "table"
+        )
+
+    def _apply_rows(self, rows: DataFrame, batch_id: int) -> None:
+        """Apply one micro-batch of :meth:`_decode` rows and commit it."""
+        target = batch_id + 1
+        versioned = not hasattr(self.store, "apply_and_commit")
         # version = batch_id + 1 (0 is the backfill). A crash between commit
         # and checkpoint ack replays this batch: without the guard the replay
         # would read v{batch_id+1} and overwrite the same directory — Spark
         # refuses ("Cannot overwrite a path that is also being read from")
         # and the pipeline wedges. An already-committed version makes the
         # replay a no-op, which is exactly the exactly-once contract (T2).
-        target = batch_id + 1
-        latest = self.store.latest_version()
-        if latest is not None and latest >= target:
-            return
-        state = self.store.read()
-        new_state = apply_changes(state, changes)
-        self.store.commit(new_state.select(*state.columns), version=target)
+        # Checked before any Spark action, so a skipped replay counts no
+        # dead letters either.
+        if versioned:
+            latest = self.store.latest_version()
+            if latest is not None and latest >= target:
+                return
+        # the count rides on the batch's first action instead of a job of
+        # its own; the reference logs & skips dead letters (T7)
+        dead = Observation()
+        rows = rows.observe(dead, F.count_if("dead_letter").alias("n"))
+        changes = rows.filter(F.col("action").isNotNull()).drop("dead_letter")
+        if versioned:
+            state = self.store.read()
+            new_state = apply_changes(state, changes)
+            self.store.commit(new_state.select(*state.columns), version=target)
+        else:
+            # incremental path: read + rewrite only the changed buckets;
+            # replay after crash re-applies idempotently (merge semantics)
+            self.store.apply_and_commit(changes)
+        self.dead_letter_count += dead.get["n"]
+
+    def _apply_batch(self, lines: DataFrame, batch_id: int) -> None:
+        """One micro-batch of raw lines, exactly as the stream applies it."""
+        self._apply_rows(self._decode(lines), batch_id)
 
     def start(self, available_now: bool = False) -> StreamingQuery:
         lines = (
@@ -150,7 +185,8 @@ class CdcPipeline:
             .load(self.source_dir)
         )
         writer = (
-            lines.writeStream.foreachBatch(self._apply_batch)
+            self._decode(lines)
+            .writeStream.foreachBatch(self._apply_rows)
             .option("checkpointLocation", self.checkpoint_dir)
             .outputMode("update")
         )

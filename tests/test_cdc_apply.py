@@ -141,6 +141,107 @@ def test_empty_state(spark):
     run_case(spark, [], events)
 
 
+def test_null_key_changes_are_dropped(spark):
+    """A change row with a NULL key matches no state row and creates none
+    (a Postgres primary key is never NULL); the keyed events around it
+    still apply."""
+    nullable = StructType(
+        [StructField(f.name, f.dataType, True) for f in CHANGE_SCHEMA.fields]
+    )
+    state = spark.createDataFrame([(1, "old", 10.0, TS(0))], STATE_SCHEMA)
+    changes = spark.createDataFrame(
+        [
+            (1, "I", None, "ghost", 1.0, TS(1)),
+            (2, "U", 1, "new", 11.0, TS(2)),
+            (3, "D", None, None, None, None),
+            (4, "I", 5, "five", 5.0, TS(3)),
+        ],
+        nullable,
+    )
+    got = sorted(
+        map(tuple, apply_changes(state, changes, value_cols=["status", "amount"]).collect())
+    )
+    assert got == [(1, "new", 11.0, TS(0)), (5, "five", 5.0, TS(3))]
+
+
+def test_other_actions_change_nothing(spark):
+    """Events whose action is not I/U/D (a wal2json ``T`` truncate marker
+    here) are no-ops, even as a key's last event."""
+    state = [(1, "old", 10.0, TS(0))]
+    events = [
+        (1, "U", 1, "new", 11.0, TS(1)),
+        (2, "T", 1, None, None, None),
+        (3, "T", 2, None, None, None),
+        (4, "I", 3, "three", 3.0, TS(2)),
+        (5, "T", 3, None, None, None),
+    ]
+    state_df = spark.createDataFrame(state, STATE_SCHEMA)
+    changes = spark.createDataFrame(events, CHANGE_SCHEMA)
+    got = sorted(
+        map(tuple, apply_changes(state_df, changes, value_cols=["status", "amount"]).collect())
+    )
+    assert got == [(1, "new", 11.0, TS(0)), (3, "three", 3.0, TS(2))]
+
+
+def test_apply_without_created_col(spark):
+    """``created_col=None``: the state carries no insert timestamp, so an
+    upsert, a re-insert after delete and a fresh insert differ only in
+    their values and liveness — output is key + value columns."""
+    state = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)],
+        "id long, status string, amount double",
+    )
+    changes = spark.createDataFrame(
+        [
+            (1, "I", 1, "a2", 1.5),  # upsert on existing key
+            (2, "D", 2, None, None),  # delete
+            (3, "D", 3, None, None),  # delete then re-insert
+            (4, "I", 3, "c2", 3.5),
+            (5, "U", 9, "ghost", 0.0),  # U on absent key: no-op
+            (6, "I", 7, "g", 7.0),  # fresh insert, then update
+            (7, "U", 7, "g2", 7.5),
+        ],
+        "seq long, action string, id long, status string, amount double",
+    )
+    out = apply_changes(state, changes, value_cols=["status", "amount"], created_col=None)
+    assert out.columns == ["id", "status", "amount"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "a2", 1.5), (3, "c2", 3.5), (7, "g2", 7.5)
+    ]
+
+
+def test_materialized_view_kwargs_match_serial_fold(spark):
+    """The keyword set ``StreamingAggView`` applies with (explicit
+    ``value_cols`` subset plus ``created_col``) over person-shaped frames:
+    equals the serial fold, output in key + value + created order."""
+    from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
+    from postgres_cdc_example_spark.streaming.materialized_view import _APPLY_KW
+
+    state_rows = [(1, "a", "u1", 10, TS(0)), (2, "b", "u2", 20, TS(0))]
+    events = [
+        (1, "U", 1, "a2", "u1", 11, TS(5)),
+        (2, "D", 2, None, None, None, None),
+        (3, "I", 2, "b2", "u2b", 21, TS(6)),
+        (4, "I", 3, "c", "u3", 30, TS(7)),
+        (5, "I", 3, "c2", "u3", 31, TS(8)),  # upsert keeps the first created_at
+        (6, "U", 4, "ghost", "u4", 40, TS(9)),
+    ]
+    changes = spark.createDataFrame(
+        events,
+        "seq long, action string, id long, name string, uid string, score int, "
+        "created_at timestamp_ntz",
+    )
+    out = apply_changes(
+        spark.createDataFrame(state_rows, PERSON_SCHEMA), changes, key="id", **_APPLY_KW
+    )
+    assert out.columns == ["id", "name", "uid", "score", "created_at"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "a2", "u1", 11, TS(0)),
+        (2, "b2", "u2b", 21, TS(6)),
+        (3, "c2", "u3", 31, TS(7)),
+    ]
+
+
 def test_compact_changes_last_write_wins(spark):
     changes = spark.createDataFrame(
         [

@@ -1012,3 +1012,54 @@ def test_pair_scale_work_never_inherits_one_partition(spark, sf_dir):
         assert n <= max(2, par // 4), n
     assert h.repartition(par).rdd.getNumPartitions() == par
     del REGISTRY
+
+
+def _assert_one_exchange_apply(plan: str) -> None:
+    """The CDC apply's shape: one hash exchange on the key (changes and
+    state meet in a single groupBy), no window, no join, no sort-based
+    aggregate."""
+    import re
+
+    assert len(re.findall(r"hashpartitioning\(id#", plan)) == 1, plan
+    assert len(re.findall(r"\) Exchange\b", plan)) == 1, plan
+    assert "Window" not in plan, plan
+    assert "Join" not in plan, plan
+    assert "SortAggregate" not in plan, plan
+
+
+def test_cdc_apply_full_is_one_exchange(spark, sf_dir):
+    _assert_one_exchange_apply(plan_of(spark, sf_dir, "cdc_apply_full"))
+
+
+def test_cdc_micro_batch_apply_is_one_exchange(spark, tmp_path):
+    """The state version a pipeline micro-batch commits: decode, publication
+    filter and apply in one plan with the apply's single exchange."""
+    from pyspark.sql import functions as F
+
+    from postgres_cdc_example_spark.sources.changelog import person_change_json
+    from postgres_cdc_example_spark.sources.generator import person_batch
+    from postgres_cdc_example_spark.streaming.pipeline import CdcPipeline
+
+    pipe = CdcPipeline(
+        spark,
+        source_dir=str(tmp_path / "changes"),
+        state_root=str(tmp_path / "state"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        predicate=F.col("score") % 2 == 0,
+    )
+    pipe.backfill(person_batch(spark, 5, seed=3))
+    committed = []
+    commit = pipe.store.commit
+
+    def record(df, version):
+        committed.append(df)
+        commit(df, version)
+
+    pipe.store.commit = record
+    row = {"id": 9, "name": "n", "uid": "u", "score": 2, "created_at": "2024-02-01 00:00:00"}
+    lines = spark.createDataFrame(
+        [(person_change_json(1, "I", row=row),), ("NOT JSON",)], "value string"
+    )
+    pipe._apply_batch(lines, batch_id=0)
+    assert pipe.dead_letter_count == 1
+    _assert_one_exchange_apply(explain_str(committed[0]))
