@@ -61,6 +61,8 @@ def split_corrupt(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     return decoded.filter(~dead), decoded.filter(dead)
 
 
+PERSON_TABLE = "person"  # the reference's single replicated table
+
 PERSON_COLUMNS = {
     "name": "string",
     "uid": "string",
@@ -93,10 +95,18 @@ def flatten_changes(
 
 
 def flat_change_columns(
-    columns: dict[str, str], key: str = "id", key_type: str = "long"
+    columns: dict[str, str],
+    key: str = "id",
+    key_type: str = "long",
+    when: Column | None = None,
 ) -> list[Column]:
     """The projection half of :func:`flatten_changes`: ``seq``, ``action``,
-    the key and the declared value columns, read off ``change``."""
+    the key and the declared value columns, read off ``change``.
+
+    With ``when``, every column is NULL on rows where it does not hold, and
+    those rows' values are never cast: CASE WHEN evaluates its branch
+    lazily, so another table's ``id`` of "a-1" cannot raise under ANSI
+    casts. This lets a caller project without filtering first."""
     cols_map = F.map_from_entries(
         F.transform("change.columns", lambda c: F.struct(c["name"], c["value"]))
     )
@@ -104,13 +114,14 @@ def flat_change_columns(
         F.transform("change.identity", lambda c: F.struct(c["name"], c["value"]))
     )
     get = lambda m, k: F.element_at(m, F.lit(k))  # noqa: E731
+    guard = (lambda c: c) if when is None else (lambda c: F.when(when, c))  # noqa: E731
     return [
-        F.col("change.seq").alias("seq"),
-        F.col("change.action").alias("action"),
-        F.coalesce(get(cols_map, key), get(ident_map, key))
-        .cast(key_type)
-        .alias(key),
-        *[get(cols_map, name).cast(tp).alias(name) for name, tp in columns.items()],
+        guard(F.col("change.seq")).alias("seq"),
+        guard(F.col("change.action")).alias("action"),
+        guard(F.coalesce(get(cols_map, key), get(ident_map, key)).cast(key_type)).alias(
+            key
+        ),
+        *[guard(get(cols_map, name).cast(tp)).alias(name) for name, tp in columns.items()],
     ]
 
 
@@ -127,7 +138,7 @@ def route_changes(
     }
 
 
-def flatten_person_changes(decoded: DataFrame, table: str = "person") -> DataFrame:
+def flatten_person_changes(decoded: DataFrame, table: str = PERSON_TABLE) -> DataFrame:
     """The reference's single table, via the generic flatten."""
     return flatten_changes(decoded, table, PERSON_COLUMNS)
 

@@ -13,7 +13,8 @@ Spark shape::
     readStream (JSON lines)                   # S5 — file source in tests,
                                               #      Kafka/Debezium in prod
       → decode_change_lines, dead flag        # S6 + T7 dead-letter
-      → flat_change_columns (person)          # P2/P7
+      → flat_change_columns (person)          # P2/P7; other tables'
+                                              # values NULL, never cast
       → predicate U→D/I transform             # P4 publication row filter
                                               # (action NULL = not replicated)
       → foreachBatch (planned once, above):
@@ -45,6 +46,7 @@ from postgres_cdc_example_spark.operators.cdc_apply import apply_changes
 from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
 from postgres_cdc_example_spark.sources.changelog import (
     PERSON_COLUMNS,
+    PERSON_TABLE,
     decode_change_lines,
     flat_change_columns,
     is_dead_letter,
@@ -116,31 +118,35 @@ class CdcPipeline:
         ``dead_letter`` flag. ``action`` is NULL on every line that does not
         replicate (dead letters, other tables' events, and inserts that fail
         the publication filter), so the batch can count each line before it
-        drops them. Projections only: a filter here would be pushed below
+        drops them. Off the person table every column but the flag is NULL
+        and no value is cast, so another table's ``id`` of "a-1" cannot
+        fail the batch under ANSI casts. Projections only: a filter here would be pushed below
         the decode and re-parse each line once per field it reads. Works on
         the streaming frame (``start`` plans it once) and on a batch of
         lines alike."""
+        dead = is_dead_letter()
+        person = (F.col("change.table") == PERSON_TABLE) & ~dead
         rows = decode_change_lines(lines).select(
-            is_dead_letter().alias("dead_letter"),
-            F.col("change.table").alias("table"),
-            *flat_change_columns(PERSON_COLUMNS),
+            dead.alias("dead_letter"),
+            *flat_change_columns(PERSON_COLUMNS, when=person),
         )
+        if self.predicate is None:
+            return rows
         a = F.col("action")
-        if self.predicate is not None:
-            # Publication row filter on the event's new image, with
-            # Postgres's filter-crossing UPDATE transform (UPDATE docs,
-            # "publication row filters"): an UPDATE whose new image leaves
-            # the filter becomes a DELETE on the key (else the stale row
-            # lingers in the target), and one whose new image satisfies it
-            # is applied as an upsert I (the old image may have failed the
-            # filter, so the key can be absent — plain U would no-op).
-            # Deletes carry no image and always replicate.
-            passes = F.coalesce(self.predicate, F.lit(False))
-            a = F.when(a == "U", F.when(passes, F.lit("I")).otherwise(F.lit("D"))).when(
+        # Publication row filter on the event's new image, with
+        # Postgres's filter-crossing UPDATE transform (UPDATE docs,
+        # "publication row filters"): an UPDATE whose new image leaves
+        # the filter becomes a DELETE on the key (else the stale row
+        # lingers in the target), and one whose new image satisfies it
+        # is applied as an upsert I (the old image may have failed the
+        # filter, so the key can be absent — plain U would no-op).
+        # Deletes carry no image and always replicate.
+        passes = F.coalesce(self.predicate, F.lit(False))
+        return rows.withColumn(
+            "action",
+            F.when(a == "U", F.when(passes, F.lit("I")).otherwise(F.lit("D"))).when(
                 (a == "D") | passes, a
-            )
-        return rows.withColumn("action", F.when(F.col("table") == "person", a)).drop(
-            "table"
+            ),
         )
 
     def _apply_rows(self, rows: DataFrame, batch_id: int) -> None:

@@ -4,6 +4,7 @@ restart/replay idempotence (the checkpoint is the replication slot)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -160,6 +161,35 @@ def test_replayed_batch_commit_is_noop(spark, tmp_path):
     assert pipe.store.latest_version() == 1
     assert sorted(map(tuple, pipe.state().collect())) == v1
     # the skipped replay must not count its dead letter a second time
+    assert pipe.dead_letter_count == 1
+
+
+def test_foreign_table_values_are_never_cast(spark, tmp_path):
+    """Other tables' events and parseable dead letters are skipped without
+    casting their values to the person schema: under ANSI casts an ``id``
+    of "a-1" or a ``score`` of "x" would otherwise fail the micro-batch and
+    stop the stream (the reference skips them, replicator/main.go:191-193)."""
+    src = str(tmp_path / "changes")
+    pipe = CdcPipeline(
+        spark,
+        source_dir=src,
+        state_root=str(tmp_path / "state"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        predicate=F.col("score") % 2 == 0,
+    )
+    pipe.backfill(person_batch(spark, 4, seed=5))
+    before = sorted(map(tuple, pipe.state().collect()))
+    foreign = {"id": "a-1", "name": "n", "uid": "u", "score": "x", "created_at": "yesterday"}
+    no_action = json.loads(person_change_json(2, "I", row=foreign))
+    del no_action["action"]  # parseable, but a dead letter
+    write_lines(src, "b0.jsonl", [
+        person_change_json(1, "I", table="audit", row=foreign),
+        person_change_json(3, "U", table="audit", row=foreign, identity={"id": "a-1"}),
+        json.dumps(no_action),
+    ])
+    run_to_completion(pipe)
+    assert pipe.store.latest_version() == 1  # the batch committed
+    assert sorted(map(tuple, pipe.state().collect())) == before
     assert pipe.dead_letter_count == 1
 
 
